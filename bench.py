@@ -19,6 +19,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from h3ron_spark import queries as Q  # noqa: E402
 from h3ron_spark.session import get_spark  # noqa: E402
+from h3ron_spark.sources.refgraph import reference_data_available  # noqa: E402
 
 # Headline benchmark queries (subset of the registry; grows per round).
 # geo_* map to BASELINE.md's B1-B6 reference workloads.
@@ -114,7 +115,7 @@ BENCH_QUERIES = [
 # The reference's own route_germany benchmark (BASELINE.md row 1) on
 # its committed 312k-edge graph file — included when the reference
 # checkout is present.
-if os.path.exists("/root/reference/data/graph-germany_r7_f64.bincode.lz"):
+if reference_data_available():
     BENCH_QUERIES.append("golden_germany_route")
 
 # The B1-B6 baseline workloads PLUS the top-10 wall-time queries

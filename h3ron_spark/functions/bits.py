@@ -193,10 +193,6 @@ def h3_hexagon_area_avg_km2(res) -> Column:
     return _res_lookup(res, _AVG_HEX_AREA_KM2)
 
 
-def h3_hexagon_area_avg_m2(res) -> Column:
-    return _res_lookup(res, _AVG_HEX_AREA_KM2) * F.lit(1_000_000.0)
-
-
 def h3_edge_length_avg_km(res) -> Column:
     """Average hexagon edge length at a resolution, km (S23
     edge_length_avg_km, directed_edge.rs:51-61)."""

@@ -78,12 +78,6 @@ _BOUNDARY_SPARK = T.ArrayType(_LATLNG_SPARK)
 _ARR_I64_SPARK = T.ArrayType(T.LongType())
 
 
-def _latlng_struct(pairs):
-    lats = pa.array([None if p is None else p[0] for p in pairs], _F64)
-    lngs = pa.array([None if p is None else p[1] for p in pairs], _F64)
-    return pa.StructArray.from_arrays([lats, lngs], names=["lat", "lng"])
-
-
 # ------------------------------------------------------------ encode / decode
 
 
@@ -148,13 +142,6 @@ def h3_cell_to_lat(cell: pa.Array) -> pa.Array:
 def h3_cell_to_lng(cell: pa.Array) -> pa.Array:
     _, ln, ok = _decode_batch(cell)
     return pa.array(ln, _F64, mask=~ok)
-
-
-@lru_cache(maxsize=_CACHE)
-def _boundary(cell):
-    if cell is None or not h3c.is_valid_cell(cell):
-        return None
-    return h3c.cell_to_boundary(cell)
 
 
 def _boundary_batch(cell: pa.Array):

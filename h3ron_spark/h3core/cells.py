@@ -791,11 +791,3 @@ def great_circle_distance_km(lat1, lng1, lat2, lng2) -> float:
 
 def great_circle_distance_m(lat1, lng1, lat2, lng2) -> float:
     return great_circle_distance_km(lat1, lng1, lat2, lng2) * 1000.0
-
-
-def cell_to_string(h: int) -> str:
-    return format(h, "x")
-
-
-def string_to_cell(s: str) -> int:
-    return int(s, 16)

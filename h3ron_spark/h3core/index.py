@@ -119,17 +119,6 @@ def rotate_pent60_ccw(h: int) -> int:
     return h
 
 
-def rotate_pent60_cw(h: int) -> int:
-    found_first = False
-    for r in range(1, get_resolution(h) + 1):
-        h = set_digit(h, r, rotate_digit_cw(get_digit(h, r)))
-        if not found_first and get_digit(h, r) != 0:
-            found_first = True
-            if leading_nonzero_digit(h) == K_AXES_DIGIT:
-                h = rotate60_cw(h)
-    return h
-
-
 def is_valid_cell(h: int) -> bool:
     if h < 0 or (h >> 63) & 1:
         return False

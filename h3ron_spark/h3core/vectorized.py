@@ -459,12 +459,6 @@ def _ijk_rotate60_cw_np(i, j, k):
     return _ijk_normalize_np(i + j, j + k, i + k)
 
 
-def _lround_np(x):
-    return np.where(
-        x >= 0, np.floor(x + 0.5), -np.floor(-x + 0.5)
-    ).astype(_I64)
-
-
 def _leading_nonzero_digit_np(c, res):
     """Vectorized index.leading_nonzero_digit."""
     lead = np.zeros(c.shape, dtype=_I64)

@@ -19,7 +19,6 @@ from h3ron_spark.operators.spatial import (  # noqa: F401
     cells_in_polygon,
     cells_in_rect,
     cells_within_distance,
-    polyfill_table,
 )
 from h3ron_spark.operators.neighbors import (  # noqa: F401
     continuous_cells_to_edges,

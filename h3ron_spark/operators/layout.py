@@ -108,21 +108,6 @@ def read_bucketed_cells(spark: SparkSession, table_name: str) -> DataFrame:
 # ---------------------------------------------------------------------
 
 
-def quantize_minmax(col, lo: float, hi: float, bits: int = 8):
-    """Linear quantization of a numeric column to [0, 2^bits): the
-    per-dimension rank proxy z-ordering interleaves. Bounds are
-    caller-provided constants (at 100 TB you know them or take them
-    from table stats); clamped so out-of-range values saturate rather
-    than wrap."""
-    c = F.col(col) if isinstance(col, str) else col
-    m = (1 << bits) - 1
-    scaled = (c.cast("double") - F.lit(float(lo))) / F.lit(
-        float(hi - lo)
-    ) * F.lit(float(m + 1))
-    q = F.floor(scaled).cast("long")
-    return F.greatest(F.lit(0), F.least(F.lit(m), q))
-
-
 def zorder_key(quantized_cols, bits: int = 8):
     """Morton interleave of d pre-quantized columns (each already in
     [0, 2^bits)): bit i of dimension j lands at position i*d + j. All

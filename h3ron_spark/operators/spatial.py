@@ -29,13 +29,12 @@ centroid-in-polygon refine.
 from __future__ import annotations
 
 import pyarrow as pa
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import arrow_udf
 from pyspark.sql.types import BooleanType
 
 from h3ron_spark.functions import bits as B
-from h3ron_spark.functions import geo as G
 
 
 _PROBE_BUDGET = 4096
@@ -68,26 +67,25 @@ def _probe_res(data_res: int, ring=None) -> int:
     return res
 
 
-def polyfill_table(
-    spark: SparkSession,
-    ring,
-    res: int,
-    holes=(),
-    intersecting: bool = False,
+def _probe_semi_join(
+    df: DataFrame, cell_col: str, probe_cells, pres: int
 ) -> DataFrame:
-    """G1 as a table generator: polyfill a polygon driver-side (the
-    polygon is a literal/small object, like the reference's query
-    geometry) into a one-column DataFrame of cells at ``res``."""
-    from h3ron_spark.h3core import regions as R
-
-    cells = (
-        R.polygon_to_intersecting_cells(ring, res, holes)
-        if intersecting
-        else R.polygon_to_cells(ring, res, holes)
-    )
+    """Coarse filter of the X4/X5/X6 predicates: keep rows whose
+    res-``pres`` ancestor lies in ``probe_cells`` grown by one ring.
+    H3 children do not nest inside their parent's boundary, so a cell
+    whose centroid lies in the region can have its ancestor just
+    outside the region's cover, but within one ring of it; the exact
+    refine drops the extra candidates the ring adds."""
+    from h3ron_spark.h3core import grid_disk
     from h3ron_spark.util import local_df
 
-    return local_df(spark, [(c,) for c in cells], "probe_cell long")
+    grown = sorted({n for c in probe_cells for n in grid_disk(c, 1)})
+    probe = local_df(df.sparkSession, [(c,) for c in grown], "probe_cell long")
+    return df.join(
+        F.broadcast(probe),
+        B.h3_to_parent(cell_col, pres) == probe.probe_cell,
+        "left_semi",
+    )
 
 
 def _rect_ring(min_lat, min_lng, max_lat, max_lng):
@@ -109,18 +107,14 @@ def cells_in_rect(
     cell_col: str = "cell",
 ) -> DataFrame:
     """X4 envelopes_intersect as a filter: keep rows whose cell's
-    coarse ancestor falls in the rect's intersecting polyfill, then
+    coarse ancestor falls near the rect's intersecting polyfill, then
     refine exactly on the centroid. Broadcast semi-join + bit math."""
-    spark = df.sparkSession
+    from h3ron_spark.h3core import regions as R
+
     ring = _rect_ring(min_lat, min_lng, max_lat, max_lng)
     pres = _probe_res(data_res, ring)
-    probe = polyfill_table(spark, ring, pres, intersecting=True)
-    coarse = df.join(
-        F.broadcast(probe),
-        B.h3_to_parent(cell_col, pres) == probe.probe_cell,
-        "left_semi",
-    )
-    return coarse.filter(
+    probe = R.polygon_to_intersecting_cells(ring, pres)
+    return _probe_semi_join(df, cell_col, probe, pres).filter(
         _centroid_in_rect(cell_col, min_lat, min_lng, max_lat, max_lng)
     )
 
@@ -205,14 +199,11 @@ def cells_in_polygon(
     """X6 geometries_intersect: coarse probe semi-join, then exact
     centroid-in-polygon refine (pandas-free: the ray-cast runs inside
     the same Arrow batch as the probe)."""
-    spark = df.sparkSession
+    from h3ron_spark.h3core import regions as R
+
     pres = _probe_res(data_res, ring)
-    probe = polyfill_table(spark, ring, pres, holes=holes, intersecting=True)
-    coarse = df.join(
-        F.broadcast(probe),
-        B.h3_to_parent(cell_col, pres) == probe.probe_cell,
-        "left_semi",
-    )
+    probe = R.polygon_to_intersecting_cells(ring, pres, holes)
+    coarse = _probe_semi_join(df, cell_col, probe, pres)
     if not exact:
         return coarse
     return coarse.filter(_centroid_in_polygon(cell_col, ring, holes))
@@ -249,23 +240,12 @@ def cells_within_distance(
         latlng_to_cell,
     )
 
-    spark = df.sparkSession
     pres = _probe_res(data_res)
     # hexagon "radius" ~ sqrt(area * 2/(3*sqrt(3)))
     hex_r_km = math.sqrt(average_hexagon_area_km2(pres) * 2 / (3 * math.sqrt(3)))
     k = max(1, int(math.ceil(distance_km / (hex_r_km * 1.5))) + 1)
     center = latlng_to_cell(lat, lng, pres)
-    from h3ron_spark.util import local_df
-
-    probe = local_df(
-        spark, [(c,) for c in grid_disk(center, k)], "probe_cell long"
-    )
-    coarse = df.join(
-        F.broadcast(probe),
-        B.h3_to_parent(cell_col, pres) == probe.probe_cell,
-        "left_semi",
-    )
-    return coarse.filter(
+    return _probe_semi_join(df, cell_col, grid_disk(center, k), pres).filter(
         _centroid_within_distance(cell_col, lat, lng, distance_km)
     )
 

@@ -13,9 +13,13 @@ localCheckpoint stores blocks in executor storage WITHOUT the lineage
 fallback, so a decommissioned executor loses them (Spark documents it
 as unsafe with dynamic allocation). On clusters that decommission
 executors mid-query, swap these sites to ``persist()`` +
-job-scoped unpersist (the idiom ``minhash_dedup_pairs`` carries):
+job-scoped unpersist (the idiom ``label_components`` carries):
 same plan shape and scan count, recoverable blocks, at the cost of
-keeping the lineage around. The checkpointed frames are always
-metadata-sized (sketches, histograms, band keys — never corpus text),
-so either materialization is cheap.
+keeping the lineage around. The checkpointed frames are
+metadata-sized (sketches, histograms, band keys) or per-document
+derived columns (shingle sets) — never corpus text — so either
+materialization is cheap. ``persist()`` without a job-scoped
+unpersist is not an option: the session's cache keeps the frame and
+hands it to any later query whose plan matches, including one over a
+rewritten parquet path.
 """

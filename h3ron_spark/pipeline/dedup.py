@@ -10,7 +10,7 @@ id and the pair space stays linear-ish in practice.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from h3ron_spark.pipeline.text import fingerprint, with_tokens
@@ -280,15 +280,6 @@ def minhash_lsh_candidates(
     )
 
 
-def jaccard_similarity(text_a: Column, text_b: Column, n: int = 3) -> Column:
-    """Exact word-shingle Jaccard between two text columns."""
-    sa = F.array_distinct(shingles(text_a, n))
-    sb = F.array_distinct(shingles(text_b, n))
-    inter = F.size(F.array_intersect(sa, sb))
-    union = F.size(sa) + F.size(sb) - inter
-    return F.round(inter.cast("double") / union, 4)
-
-
 def minhash_dedup_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -298,27 +289,30 @@ def minhash_dedup_pairs(
 ) -> DataFrame:
     """LSH candidates refined by exact shingle Jaccard >= threshold.
 
-    The tokenize/shingle pass runs ONCE per document (persisted
-    ``doc_shingles_df``); the signature stage explodes that cached
-    array (no dropDuplicates shuffle — arrays are pre-distinct) and
-    the Jaccard refine joins the same cached arrays into the
-    candidate pairs instead of re-splitting raw text per pair. The
-    banded signature table is persisted too so the LSH self-join
-    reads it twice without re-running the hash/min pipeline.
+    The tokenize/shingle pass runs ONCE per document (checkpointed
+    ``doc_shingles_df``); the signature stage explodes that
+    materialized array (no dropDuplicates shuffle — arrays are
+    pre-distinct) and the Jaccard refine joins the same arrays into
+    the candidate pairs instead of re-splitting raw text per pair. The
+    banded signature table is checkpointed too so the LSH self-join
+    reads it twice without re-running the hash/min pipeline (local
+    checkpoints, not ``persist()``: see the package docstring).
 
     ``doc_sh`` lets a caller that ALREADY derives the per-document
     distinct shingle set (id, sh) — e.g. a curation funnel sharing one
     corpus scan across its stage families — supply it instead of
     paying a second scan+tokenize here. The caller owns its
-    materialization (pass a persisted frame or a cheap projection of
-    one); the arrays must be ``array_distinct(shingles(text, 3))``
+    materialization (pass a checkpointed frame or a cheap projection
+    of one); the arrays must be ``array_distinct(shingles(text, 3))``
     over the same id/text, which is exactly ``doc_shingles_df``'s
     contract — the default path is unchanged."""
     if doc_sh is None:
-        doc_sh = doc_shingles_df(df, text_col, id_col).persist()
+        doc_sh = doc_shingles_df(df, text_col, id_col).localCheckpoint(
+            eager=True
+        )
     sigs = minhash_signature_df(df, doc_sh=doc_sh).select(
         "id", F.explode(_band_keys_from_sig()).alias("band")
-    ).persist()
+    ).localCheckpoint(eager=True)
     a = sigs.alias("a")
     b = sigs.alias("b")
     cands = (
@@ -362,17 +356,9 @@ def simhash(text, bits: int = 32) -> Column:
     return acc
 
 
-def dedup_keep_first(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Materialized dedup: keep the lowest-id row per exact content."""
-    w = Window.partitionBy(fingerprint(text_col)).orderBy(F.col(id_col).asc())
-    return df.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1).drop("_rn")
-
-
 def ngram_contamination(
-    corpus: DataFrame,
-    benchmark: DataFrame,
+    corpus: DataFrame | None = None,
+    benchmark: DataFrame | None = None,
     text_col: str = "text",
     id_col: str = "doc_id",
     n: int = 3,
@@ -393,9 +379,11 @@ def ngram_contamination(
     ``corpus_sh`` / ``benchmark_sh`` let a caller that already
     materializes the per-document distinct gram arrays (id, sh) —
     ``doc_shingles_df``'s shape with the same ``n`` — feed them in
-    instead of re-scanning and re-tokenizing raw text per side;
-    exploding a pre-distinct array yields exactly the rows the
-    default path derives, so results are identical by construction."""
+    instead of re-scanning and re-tokenizing raw text per side (the
+    raw ``corpus`` / ``benchmark`` frame of a side given that way is
+    not needed); exploding a pre-distinct array yields exactly the
+    rows the default path derives, so results are identical by
+    construction."""
     if benchmark_sh is not None:
         bench_grams = (
             benchmark_sh.select(F.explode("sh").alias("gram"))

@@ -105,19 +105,6 @@ def lang_guess(text) -> Column:
     return out
 
 
-def document_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Attach the full per-document stats column set."""
-    return (
-        df.withColumn("n_tokens", token_count(text_col))
-        .withColumn("chars_per_token", char_per_token(text_col))
-        .withColumn("stopword_ratio", stopword_ratio(text_col))
-        .withColumn("distinct_ratio", distinct_token_ratio(text_col))
-        .withColumn("quality", quality_score(text_col))
-        .withColumn("fingerprint", fingerprint(text_col))
-        .withColumn("lang_guess", lang_guess(text_col))
-    )
-
-
 # GPT-2-style pre-tokenizer shape, reduced to a class both Spark (Java
 # regex) and DuckDB (RE2) evaluate identically: alnum runs, single
 # non-alnum-non-space marks, no lookarounds.

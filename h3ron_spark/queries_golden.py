@@ -719,9 +719,6 @@ def golden_osm_pbf_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
 # P14 + P5: the reference's own Germany routing benchmark
 # ---------------------------------------------------------------------
 
-_GERMANY_GRAPH = "/root/reference/data/graph-germany_r7_f64.bincode.lz"
-_PREPARED_GRAPH_CACHE: dict = {}
-
 _GERMANY_ORACLE = """
   SELECT * FROM (VALUES
     ('871f14c2dffffff', CAST(1160.0 AS DOUBLE), CAST(363 AS INT)),
@@ -748,17 +745,13 @@ def golden_germany_route(spark: SparkSession, sf_dir: str) -> DataFrame:
         shortest_path_many_to_many,
     )
     from h3ron_spark.h3core import index as ix
-    from h3ron_spark.queries_h3 import _session_key
-    from h3ron_spark.sources.refgraph import reference_graph_to_edges
+    from h3ron_spark.sources.refgraph import (
+        GERMANY_GRAPH,
+        reference_graph_to_edges,
+    )
 
-    edges = reference_graph_to_edges(spark, _GERMANY_GRAPH)
-    # prepared-graph reuse across calls IS the reference bench's shape
-    # (route_germany.rs:58-83 routes on one loaded PreparedH3EdgeGraph)
-    pkey = (_session_key(spark), _GERMANY_GRAPH)
-    prepared = _PREPARED_GRAPH_CACHE.get(pkey)
-    if prepared is None:
-        prepared = prepare_routing_graph(edges)
-        _PREPARED_GRAPH_CACHE[pkey] = prepared
+    edges = reference_graph_to_edges(spark, GERMANY_GRAPH)
+    prepared = prepare_routing_graph(edges)
     origin = ix.latlng_to_cell(
         math.radians(47.68708804564653), math.radians(9.834909439086914), 7
     )

@@ -311,36 +311,27 @@ _SUBSTRING_ORACLE = rf"""
 """
 
 
-_SUBSTRING_STAGE_CACHE: dict = {}
-
-
 def _substring_gram_positions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, pos, gram) for every token 8-gram — staged once per
-    session (repartition + localCheckpoint) and SHARED by the spans
-    and coverage queries. Without staging the explode subtree runs
-    twice per query (dup-agg branch + mark-back branch): measured
-    14-19 s -> 2.8-3.5 s per query at sf1. Same session-stage idiom
-    as the raster frame (_RASTER_STAGE_CACHE)."""
-    key = (_session_key(spark), sf_dir, "sub8")
-    staged = _SUBSTRING_STAGE_CACHE.get(key)
-    if staged is None:
-        k = _SUBSTRING_K
-        docs = load(spark, sf_dir, "documents")
-        t = docs.select(
-            "doc_id", F.split(F.trim(F.col("text")), r"\s+").alias("toks")
-        )
-        grams = F.expr(
-            f"transform(sequence(0, size(toks) - {k}),"
-            f" i -> array_join(slice(toks, i + 1, {k}), ' '))"
-        )
-        staged = (
-            t.filter(F.size("toks") >= k)
-            .select("doc_id", F.posexplode(grams).alias("pos", "gram"))
-            .repartition(spark.sparkContext.defaultParallelism)
-            .localCheckpoint(eager=True)
-        )
-        _SUBSTRING_STAGE_CACHE[key] = staged
-    return staged
+    """(doc_id, pos, gram) for every token 8-gram, staged
+    (repartition + localCheckpoint) for the calling query, which reads
+    it twice. Without staging the explode subtree runs twice per query
+    (dup-agg branch + mark-back branch): measured 14-19 s -> 2.8-3.5 s
+    per query at sf1."""
+    k = _SUBSTRING_K
+    docs = load(spark, sf_dir, "documents")
+    t = docs.select(
+        "doc_id", F.split(F.trim(F.col("text")), r"\s+").alias("toks")
+    )
+    grams = F.expr(
+        f"transform(sequence(0, size(toks) - {k}),"
+        f" i -> array_join(slice(toks, i + 1, {k}), ' '))"
+    )
+    return (
+        t.filter(F.size("toks") >= k)
+        .select("doc_id", F.posexplode(grams).alias("pos", "gram"))
+        .repartition(spark.sparkContext.defaultParallelism)
+        .localCheckpoint(eager=True)
+    )
 
 
 @register("dedup_substring_spans", oracle=_SUBSTRING_ORACLE)
@@ -353,13 +344,12 @@ def dedup_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     trims on.
 
     Scale shape: one explode to (doc, pos, gram) — linear in corpus
-    tokens, staged once per session and shared with the coverage
-    query; duplicated grams found with a two-level partial-agg
-    (distinct (gram, doc) then count per gram, both map-side
-    combinable); the mark-back join re-uses the gram shuffle
-    partitioning. No suffix array, no driver state; the fraction is
-    floor(x*1e4+0.5)/1e4 on BOTH engines (identical doubles ->
-    identical floor, no decimal re-rounding)."""
+    tokens, staged once and read by both branches; duplicated grams
+    found with a two-level partial-agg (distinct (gram, doc) then
+    count per gram, both map-side combinable); the mark-back join
+    re-uses the gram shuffle partitioning. No suffix array, no driver
+    state; the fraction is floor(x*1e4+0.5)/1e4 on BOTH engines
+    (identical doubles -> identical floor, no decimal re-rounding)."""
     k = _SUBSTRING_K
     docs = load(spark, sf_dir, "documents")
     t = docs.select(
@@ -464,8 +454,8 @@ def dedup_substring_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     running sum numbers them, and per-island max(end)-min(start) sums
     to the exact covered length. All integer arithmetic; identical
     plans at any scale (two windows + two aggs on the doc_id
-    partitioning); the gram explode is session-staged and shared
-    with dedup_substring_spans."""
+    partitioning); the gram explode is staged as in
+    dedup_substring_spans."""
     from pyspark.sql import Window
 
     k = _SUBSTRING_K
@@ -1217,7 +1207,7 @@ def pipeline_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     The corpus is SCANNED once too (r12): every per-document
     derivation the four families need — content hash, distinct
     shingle set (shared by minhash and decontamination, which use the
-    same n=3 grams), token stats — rides one persisted base frame.
+    same n=3 grams), token stats — rides one checkpointed base frame.
     Before it, the 4-family join tree read documents.parquet five
     times and tokenized the corpus three times (Catalyst does not CSE
     plan subtrees); at 100 TB the scan count IS the cost of a 20-row
@@ -1235,7 +1225,7 @@ def pipeline_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
         TX.top_token_fraction("text").alias("top_tok"),
         # doc_shingles_df's contract: distinct word-trigram shingles
         F.array_distinct(DD.shingles("text", 3)).alias("sh"),
-    ).persist()
+    ).localCheckpoint(eager=True)
     doc_sh = base.select(F.col("doc_id").alias("id"), "sh")
     exact_min = base.groupBy("h").agg(F.min("doc_id").alias("exact_min"))
     pairs = DD.minhash_dedup_pairs(docs, threshold=0.5, doc_sh=doc_sh)
@@ -1244,7 +1234,7 @@ def pipeline_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     bench_sh = doc_sh.filter(F.col("id") % 97 == 0)
     contam = DD.ngram_contamination(
-        docs, docs, corpus_sh=doc_sh, benchmark_sh=bench_sh
+        corpus_sh=doc_sh, benchmark_sh=bench_sh
     ).select(F.col("id").alias("doc_id"), "contamination")
     f = (
         base.join(exact_min, "h")
@@ -1653,33 +1643,9 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = emb.filter(F.col("vec_id") % 50 == 0).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    # quantizer = trained-model artifact: load once per (session, sf)
-    ckey = (_session_key(spark), sf_dir)
-    cents = _IVF_CENT_CACHE.get(ckey)
-    if cents is None:
-        cents = SIM.ivf_centroid_rows(emb, _IVF_LISTS)
-        _IVF_CENT_CACHE[ckey] = cents
     return SIM.ivf_topk(
-        emb, queries, n_lists=_IVF_LISTS, nprobe=_IVF_NPROBE, k=5,
-        centroids=cents,
+        emb, queries, n_lists=_IVF_LISTS, nprobe=_IVF_NPROBE, k=5
     )
-
-
-_IVF_CENT_CACHE: dict = {}
-_SSSP_EDGE_CACHE: dict = {}
-_RASTER_STAGE_CACHE: dict = {}
-_COMPACT_CHILD_CACHE: dict = {}
-
-
-def _session_key(spark: SparkSession) -> str:
-    """Stable per-session cache key. ``id(spark)`` can be reused by a
-    NEW session after the old one is garbage-collected, handing stale
-    centroids / dead checkpointed DataFrames to the new session;
-    applicationId is unique per SparkContext lifetime."""
-    try:
-        return spark.sparkContext.applicationId
-    except Exception:  # stopped context: never match a live entry
-        return f"stopped-{id(spark)}"
 
 _EMB_DUP_THRESHOLD = 0.25
 
@@ -2319,16 +2285,10 @@ def geo_compact_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     # mapping join per branch (local: 3.1 -> 1.6 s; at 100 TB the same
     # rule: checkpoint an expensive lineage before compacting it).
     # localCheckpoint preserves the physical partitions, so the
-    # assume_partitioned subtree co-location survives. Session-cached
-    # like the raster stage: the reference's bench shape loads its
-    # dataset once outside the iteration loop.
-    ckey = (_session_key(spark), "b3children")
-    children = _COMPACT_CHILD_CACHE.get(ckey)
-    if children is None:
-        children = uncompact_dataframe(
-            src, 10, "cell", partition_res=5
-        ).localCheckpoint(eager=True)
-        _COMPACT_CHILD_CACHE[ckey] = children
+    # assume_partitioned subtree co-location survives.
+    children = uncompact_dataframe(
+        src, 10, "cell", partition_res=5
+    ).localCheckpoint(eager=True)
     comp = compact_dataframe(
         children, "cell", partition_res=5, assume_partitioned=True
     )
@@ -2339,25 +2299,10 @@ def geo_compact_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_LINE_GRAPH_CACHE: dict = {}
-
-
 def _event_line_graph(spark: SparkSession, sf_dir: str, n_points: int = 40, res: int = 6):
     """Deterministic line graph: a linestring through the first
     ``n_points`` event coordinates (ordered by event_id), traced at
-    ``res``.
-
-    Session-cached per (sf_dir, n_points, res): a deployed graph is
-    built once and persisted (P14 save_graph/load_graph); queries then
-    route against the stored edges table. The cache reproduces that
-    shape — the first call pays trace+build, subsequent routing
-    queries reuse the checkpointed edges exactly as they would reuse
-    the Parquet table.
-    """
-    key = (_session_key(spark), sf_dir, n_points, res)
-    cached = _LINE_GRAPH_CACHE.get(key)
-    if cached is not None:
-        return cached
+    ``res``."""
     from h3ron_spark.graph import graph_from_linestrings
 
     ev = (
@@ -2399,9 +2344,7 @@ def _event_line_graph(spark: SparkSession, sf_dir: str, n_points: int = 40, res:
     ).repartition(len(rows))
     # several downstream actions (adjacency collect, node listing)
     # reuse the edges — materialize once
-    g = graph_from_linestrings(df, res).localCheckpoint(eager=True)
-    _LINE_GRAPH_CACHE[key] = g
-    return g
+    return graph_from_linestrings(df, res).localCheckpoint(eager=True)
 
 
 @register("geo_route_line")
@@ -2410,32 +2353,16 @@ def geo_route_line(spark: SparkSession, sf_dir: str) -> DataFrame:
     shortest paths — 100 origins x 10 destinations on a ~10k-edge
     traced linestring graph (broadcast adjacency + one Dijkstra per
     origin fanned out via mapInPandas)."""
-    from h3ron_spark.graph import graph_nodes, shortest_path_many_to_many
+    from h3ron_spark.graph import shortest_path_many_to_many
+    from h3ron_spark.graph.algorithms import prepare_routing_graph
 
     g = _event_line_graph(spark, sf_dir, n_points=300, res=7)
-    prepared = _prepared_line_graph(spark, g, (sf_dir, 300, 7))
+    prepared = prepare_routing_graph(g)
     nodes = _spread_nodes(g, 110, prepared=prepared)
     out = shortest_path_many_to_many(
         g, nodes[:100], nodes[100:110], prepared=prepared
     )
     return out.select("origin", "destination", F.round("cost", 4).alias("cost"))
-
-
-_ROUTE_PREP_CACHE: dict = {}
-
-
-def _prepared_line_graph(spark, g, key_extra):
-    """Session-cached prepare_routing_graph handle for a line graph —
-    the prepared-adjacency reuse the reference bench shape implies
-    (one loaded graph, many routing calls)."""
-    from h3ron_spark.graph.algorithms import prepare_routing_graph
-
-    key = (_session_key(spark), key_extra)
-    prepared = _ROUTE_PREP_CACHE.get(key)
-    if prepared is None:
-        prepared = prepare_routing_graph(g)
-        _ROUTE_PREP_CACHE[key] = prepared
-    return prepared
 
 
 def _spread_nodes(g, n: int, prepared=None) -> list[int]:
@@ -2464,9 +2391,10 @@ def geo_route_path_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference's deterministic (cost, origin, destination) order
     (path.rs:69-135, :194-206)."""
     from h3ron_spark import graph as GR
+    from h3ron_spark.graph.algorithms import prepare_routing_graph
 
     g = _event_line_graph(spark, sf_dir)
-    prepared = _prepared_line_graph(spark, g, (sf_dir, 40, 6))
+    prepared = prepare_routing_graph(g)
     nodes = _spread_nodes(g, 12, prepared=prepared)
     sp = GR.shortest_path_many_to_many(
         g, nodes[:6], nodes[6:12], prepared=prepared
@@ -2509,9 +2437,10 @@ def geo_isochrone(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Isochrone flood on the event line graph, min-merged over two
     origins; returns the reachable-cell histogram by integer cost."""
     from h3ron_spark.graph import within_weight_threshold
+    from h3ron_spark.graph.algorithms import prepare_routing_graph
 
     g = _event_line_graph(spark, sf_dir)
-    prepared = _prepared_line_graph(spark, g, (sf_dir, 40, 6))
+    prepared = prepare_routing_graph(g)
     # first two nodes in cell order, read off the prepared (sorted)
     # node array — identical to graph_nodes().orderBy().limit(2)
     nodes = [int(x) for x in prepared.value[6][:2]]
@@ -2570,25 +2499,19 @@ def geo_raster_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     # so block interiors cover complete sibling sets and the
     # compaction is real
     t = Transform.from_gdal((-122.6, 0.0003, 0.0, 37.95, 0.0, -0.0003))
-    # stage the loaded raster once per session (repartition so the
-    # encode fans across cores; checkpoint so the 400k-pixel local
-    # relation isn't re-shipped from the driver on every job) — the
-    # reference's convert bench likewise loads the tiff once outside
-    # its iteration loop
-    skey = (_session_key(spark), "raster2000")
-    staged = _RASTER_STAGE_CACHE.get(skey)
-    if staged is None:
-        yy, xx = np.mgrid[0:n, 0:n]
-        block = (yy // 50) * 40 + (xx // 50)  # 40x40 grid of 50px blocks
-        arr = np.where(block % 10 == 0, 1 + (block // 10) % 4, 0).astype(
-            np.int64
-        )  # 10% nonzero, values 1..4
-        staged = (
-            raster_to_dataframe(spark, arr, nodata=0)
-            .repartition(spark.sparkContext.defaultParallelism)
-            .localCheckpoint(eager=True)
-        )
-        _RASTER_STAGE_CACHE[skey] = staged
+    # stage the loaded raster (repartition so the encode fans across
+    # cores; checkpoint so the 400k-pixel local relation isn't
+    # re-shipped from the driver on every job)
+    yy, xx = np.mgrid[0:n, 0:n]
+    block = (yy // 50) * 40 + (xx // 50)  # 40x40 grid of 50px blocks
+    arr = np.where(block % 10 == 0, 1 + (block // 10) % 4, 0).astype(
+        np.int64
+    )  # 10% nonzero, values 1..4
+    staged = (
+        raster_to_dataframe(spark, arr, nodata=0)
+        .repartition(spark.sparkContext.defaultParallelism)
+        .localCheckpoint(eager=True)
+    )
     cells = raster_to_cells(
         spark, None, t, 11, nodata=0, mode="pixel_center", pixels_df=staged
     )
@@ -3168,30 +3091,23 @@ def graph_sssp_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
     from h3ron_spark.graph.synthetic import torus_grid_graph
 
     n = _sssp_grid_n(sf_dir)
-    # The prepared (tiled + checkpointed + worker-resident) graph is a
-    # one-time artifact, like a loaded routing graph in the reference:
-    # repeated floods reuse it and pay only the frontier rounds
-    key = (_session_key(spark), n)
-    prepared = _SSSP_EDGE_CACHE.get(key)
-    if prepared is None:
-        edges = torus_grid_graph(spark, n, directions=4)
-        # spatial tile key (coordinate blocks, seam shifted half a
-        # tile off the wraparound so node 0's neighborhood is tile-
-        # interior): block-local Dijkstra settles whole tiles per
-        # round, so global rounds track the TILE diameter of the
-        # flood, not its 8-hop cell radius
-        tb = max(1, n // 16)
-        half = tb // 2
+    edges = torus_grid_graph(spark, n, directions=4)
+    # spatial tile key (coordinate blocks, seam shifted half a tile off
+    # the wraparound so node 0's neighborhood is tile-interior):
+    # block-local Dijkstra settles whole tiles per round, so global
+    # rounds track the TILE diameter of the flood, not its 8-hop cell
+    # radius
+    tb = max(1, n // 16)
+    half = tb // 2
 
-        def tile(o):
-            x = (o / n).cast("long")
-            y = o % n
-            return ((x + half) % n / tb).cast("long") * 16 + (
-                (y + half) % n / tb
-            ).cast("long")
+    def tile(o):
+        x = (o / n).cast("long")
+        y = o % n
+        return ((x + half) % n / tb).cast("long") * 16 + (
+            (y + half) % n / tb
+        ).cast("long")
 
-        prepared = prepare_sssp_edges(edges, tile)
-        _SSSP_EDGE_CACHE[key] = prepared
+    prepared = prepare_sssp_edges(edges, tile)
     dist = sssp_frontier(prepared, [0], threshold=float(_SSSP_T))
     return (
         dist.groupBy(F.col("weight").cast("int").alias("weight"))
@@ -3382,13 +3298,8 @@ def dedup_semantic_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     SQL."""
     par = spark.sparkContext.defaultParallelism
     emb = load(spark, sf_dir, "embeddings").repartition(par)
-    ckey = (_session_key(spark), sf_dir)
-    cents = _IVF_CENT_CACHE.get(ckey)
-    if cents is None:
-        cents = SIM.ivf_centroid_rows(emb, _IVF_LISTS)
-        _IVF_CENT_CACHE[ckey] = cents
     return SIM.semantic_dedup_pairs(
-        emb, _SEMANTIC_THRESHOLD, n_lists=_IVF_LISTS, centroids=cents
+        emb, _SEMANTIC_THRESHOLD, n_lists=_IVF_LISTS
     )
 
 
@@ -3524,17 +3435,11 @@ def _pq_l2_sql(vec: str, cent: str, s: int, sub: int) -> str:
     return " + ".join(terms)
 
 
-def _pq_books(spark: SparkSession, sf_dir: str, emb: DataFrame):
-    """Session-cached PQ codebooks — ann_pq_adc_topk and
-    ann_ivfpq_topk are documented as sharing ONE trained model; a
-    single get-or-fit keeps their cache keys and training params from
-    drifting apart."""
-    ckey = (_session_key(spark), sf_dir, "pq", _PQ_M, _PQ_K, _PQ_ITERS)
-    books = _IVF_CENT_CACHE.get(ckey)
-    if books is None:
-        books = SIM.pq_fit(emb, m=_PQ_M, k=_PQ_K, n_iter=_PQ_ITERS)
-        _IVF_CENT_CACHE[ckey] = books
-    return books
+def _pq_books(emb: DataFrame):
+    """PQ codebooks — ann_pq_adc_topk and ann_ivfpq_topk are
+    documented as sharing ONE trained model; a single fit keeps their
+    training params from drifting apart."""
+    return SIM.pq_fit(emb, m=_PQ_M, k=_PQ_K, n_iter=_PQ_ITERS)
 
 
 def _pq_train_ctes() -> str:
@@ -3640,7 +3545,7 @@ def ann_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     encoding, and ADC are all hash-checked end to end."""
     par = spark.sparkContext.defaultParallelism
     emb = load(spark, sf_dir, "embeddings").repartition(par)
-    books = _pq_books(spark, sf_dir, emb)
+    books = _pq_books(emb)
     queries = emb.filter(F.col("vec_id") % 50 == 0).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
@@ -3690,21 +3595,13 @@ def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     composed path is hash-checked."""
     par = spark.sparkContext.defaultParallelism
     emb = load(spark, sf_dir, "embeddings").repartition(par)
-    books = _pq_books(spark, sf_dir, emb)
-    # reuse the session-cached IVF centroids (same (session, sf) key
-    # ann_ivf_topk populates) — ivf_centroid_rows is a driver collect
-    ckey = (_session_key(spark), sf_dir)
-    cents = _IVF_CENT_CACHE.get(ckey)
-    if cents is None:
-        cents = SIM.ivf_centroid_rows(emb, _IVF_LISTS)
-        _IVF_CENT_CACHE[ckey] = cents
+    books = _pq_books(emb)
     queries = emb.filter(F.col("vec_id") % 50 == 0).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
     return SIM.ivfpq_topk(
         emb, queries, books,
         n_lists=_IVF_LISTS, nprobe=_IVF_NPROBE, k_top=5,
-        centroids=cents,
     )
 
 
@@ -3718,11 +3615,7 @@ def ann_ivf_trained_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     algorithm itself is hash-checked, not just the final probe."""
     par = spark.sparkContext.defaultParallelism
     emb = load(spark, sf_dir, "embeddings").repartition(par)
-    ckey = (_session_key(spark), sf_dir, "kmeans", _KMEANS_ITERS)
-    cents = _IVF_CENT_CACHE.get(ckey)
-    if cents is None:
-        cents = SIM.kmeans_fit(emb, _IVF_LISTS, n_iter=_KMEANS_ITERS)
-        _IVF_CENT_CACHE[ckey] = cents
+    cents = SIM.kmeans_fit(emb, _IVF_LISTS, n_iter=_KMEANS_ITERS)
     queries = emb.filter(F.col("vec_id") % 50 == 0).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
@@ -3744,13 +3637,9 @@ def ann_ivf_sampled_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-checked."""
     par = spark.sparkContext.defaultParallelism
     emb = load(spark, sf_dir, "embeddings").repartition(par)
-    ckey = (_session_key(spark), sf_dir, "kmeans_sampled", _KMEANS_ITERS)
-    cents = _IVF_CENT_CACHE.get(ckey)
-    if cents is None:
-        cents = SIM.kmeans_fit(
-            emb, _IVF_LISTS, n_iter=_KMEANS_ITERS, train_fraction=0.25
-        )
-        _IVF_CENT_CACHE[ckey] = cents
+    cents = SIM.kmeans_fit(
+        emb, _IVF_LISTS, n_iter=_KMEANS_ITERS, train_fraction=0.25
+    )
     queries = emb.filter(F.col("vec_id") % 50 == 0).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
@@ -5247,19 +5136,13 @@ def ann_ivfpq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     are hash-checked."""
     par = spark.sparkContext.defaultParallelism
     emb = load(spark, sf_dir, "embeddings").repartition(par)
-    books = _pq_books(spark, sf_dir, emb)
-    ckey = (_session_key(spark), sf_dir)
-    cents = _IVF_CENT_CACHE.get(ckey)
-    if cents is None:
-        cents = SIM.ivf_centroid_rows(emb, _IVF_LISTS)
-        _IVF_CENT_CACHE[ckey] = cents
+    books = _pq_books(emb)
     queries = emb.filter(F.col("vec_id") % 50 == 0).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
     return SIM.ivfpq_rerank_topk(
         emb, queries, books,
         n_lists=_IVF_LISTS, nprobe=_IVF_NPROBE, k_short=20, k_top=5,
-        centroids=cents,
     )
 
 

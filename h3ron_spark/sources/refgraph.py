@@ -27,9 +27,20 @@ the reference's own Germany graph unchanged.
 
 from __future__ import annotations
 
+import os
 import struct
 
 import numpy as np
+
+# The reference's committed routing-bench graph (route_germany.rs).
+GERMANY_GRAPH = "/root/reference/data/graph-germany_r7_f64.bincode.lz"
+
+
+def reference_data_available() -> bool:
+    """True when the reference checkout's Germany graph file exists.
+    Without it ``golden_germany_route`` raises ``FileNotFoundError``
+    naming the file; the bench and the tests leave it out."""
+    return os.path.exists(GERMANY_GRAPH)
 
 
 def lz4_frame_decompress(data: bytes) -> bytes:
@@ -219,7 +230,6 @@ def reference_graph_to_edges(spark, path: str, cache_dir: str | None = None):
     P14 persistence model: decode -> store -> route against the
     table); destination cells come from the vectorized disk kernel's
     neighbor math via the existing edge functions."""
-    import os
     import tempfile
 
     from h3ron_spark.functions import geo as G

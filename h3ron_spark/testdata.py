@@ -62,11 +62,3 @@ def derived_lat(user_id="user_id", event_id="event_id") -> Column:
 
 DERIVED_LNG_SQL = "((event_id % 36000) / 100.0 - 180.0)"
 DERIVED_LAT_SQL = "(((user_id * 7 + event_id) % 16000) / 100.0 - 80.0)"
-
-
-def events_with_coords(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return (
-        load(spark, sf_dir, "events")
-        .withColumn("lng", derived_lng())
-        .withColumn("lat", derived_lat())
-    )

@@ -185,19 +185,34 @@ def test_dissolve_df(spark, disk_df):
         assert smv[v].geometry_wkt.count(",") <= byv[v].geometry_wkt.count(",")
 
 
+# a res-9 cell whose centroid lies just inside the rect's west edge
+# while its res-6 ancestor is outside the rect's intersecting polyfill
+# (H3 children do not nest inside their parent's boundary)
+TOKYO = 617826181191565311
+
+
 def test_cells_in_rect_exact(spark, disk_df):
-    got = {
-        r.cell
-        for r in OPS.cells_in_rect(
-            disk_df, 37.70, -122.50, 37.82, -122.38, 8, "cell"
-        ).collect()
-    }
-    want = set()
-    for c in h3c.grid_disk(SEED, 10) + h3c.grid_disk(FAR, 3):
-        la, ln = h3c.cell_to_latlng(c)
-        if 37.70 <= la <= 37.82 and -122.50 <= ln <= -122.38:
-            want.add(c)
-    assert got == want and len(want) > 0
+    tokyo = h3c.grid_disk(TOKYO, 20)
+    tokyo_df = spark.createDataFrame([(c,) for c in tokyo], "cell long")
+    cases = [
+        (disk_df, h3c.grid_disk(SEED, 10) + h3c.grid_disk(FAR, 3),
+         (37.70, -122.50, 37.82, -122.38), 8),
+        (tokyo_df, tokyo, (35.63, 139.64, 35.73, 139.74), 9),
+    ]
+    for df, cells, (lo_la, lo_ln, hi_la, hi_ln), res in cases:
+        got = {
+            r.cell
+            for r in OPS.cells_in_rect(
+                df, lo_la, lo_ln, hi_la, hi_ln, res, "cell"
+            ).collect()
+        }
+        want = set()
+        for c in cells:
+            la, ln = h3c.cell_to_latlng(c)
+            if lo_la <= la <= hi_la and lo_ln <= ln <= hi_ln:
+                want.add(c)
+        assert got == want and len(want) > 0
+    assert TOKYO in got
 
 
 def test_cells_in_polygon_exact(spark, disk_df):

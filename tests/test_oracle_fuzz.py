@@ -54,8 +54,12 @@ def _fuzz_query_names():
 
 @pytest.fixture(scope="module", params=[5, 9])
 def sliced_dir(request, tmp_path_factory):
+    """Every slice is written to the SAME directory, each over the one
+    before, so a query that keeps state keyed on its input path across
+    calls reads a stale result on the second slice and fails here."""
     mod = request.param
-    out = tmp_path_factory.mktemp(f"slice_mod{mod}")
+    out = tmp_path_factory.getbasetemp() / "slice"
+    out.mkdir(exist_ok=True)
     con = duckdb.connect()
     for t in TABLES:
         src = f"{SRC_DIR}/{t}.parquet"

@@ -135,16 +135,17 @@ def test_refgraph_read_is_pure_columnar(spark):
     """The cached reference-graph table must read as a plain parquet
     scan with no Python in the plan (destinations were materialized
     at decode time)."""
-    import os
-
     import pytest as _pytest
 
-    path = "/root/reference/data/graph-germany_r7_f64.bincode.lz"
-    if not os.path.exists(path):
-        _pytest.skip("reference data not available")
-    from h3ron_spark.sources.refgraph import reference_graph_to_edges
+    from h3ron_spark.sources.refgraph import (
+        GERMANY_GRAPH,
+        reference_data_available,
+        reference_graph_to_edges,
+    )
 
-    df = reference_graph_to_edges(spark, path)
+    if not reference_data_available():
+        _pytest.skip("reference data not available")
+    df = reference_graph_to_edges(spark, GERMANY_GRAPH)
     jmode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
         "formatted"
     )

@@ -4,21 +4,20 @@ route_germany workload on the committed Germany graph."""
 
 from __future__ import annotations
 
-import os
 import struct
 
 import numpy as np
 import pytest
 
 from h3ron_spark.sources.refgraph import (
+    GERMANY_GRAPH as GERMANY,
     load_prepared_graph_file,
     lz4_frame_decompress,
+    reference_data_available,
 )
 
-GERMANY = "/root/reference/data/graph-germany_r7_f64.bincode.lz"
-
 needs_ref = pytest.mark.skipif(
-    not os.path.exists(GERMANY), reason="reference data not available"
+    not reference_data_available(), reason="reference data not available"
 )
 
 
@@ -123,6 +122,7 @@ def test_route_germany_pinned(spark):
     assert got == {emden: (1160.0, 363), stralsund: (1330.0, 421)}
 
 
+@needs_ref
 def test_route_germany_contracted_matches_pinned(spark):
     """LongEdge contraction on the real 312k-edge graph: same pinned
     costs and identical fully-expanded path lengths as the
